@@ -6,7 +6,9 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
+import graft.domain.TimeCodec
 import graft.operators.DerivedSignalLog
 import graft.projection.SignalStore
 import graft.streaming.StreamingProjection
@@ -27,15 +29,14 @@ import graft.streaming.StreamingProjection
   * LIVE serving (the reference's consumer-feeds-reads loop,
   * handler/signal.go:30-46 reading the Redis view the running consumer
   * updates): [[startLive]] serves the routes off the streaming
-  * projection's [[graft.streaming.BucketedStateStore]] — every request
-  * observes the newest complete generation, so a signal merged by the
-  * stream between two requests is visible to the second one. Both the
-  * serving PLANS and the rendered RESULTS are memoized, per GENERATION:
-  * a new generation swaps in a fresh serving set (one volatile
-  * reference), so memoization never serves stale state, and within a
-  * generation a listing costs one collect and a repeated point lookup
-  * costs a map probe — the reference's Redis read path (the rendered
-  * view IS the cache; the consumer's writes are the invalidation).
+  * projection's [[graft.streaming.BucketedStateStore]]. Every request
+  * resolves the store's newest committed log entry, so a signal merged by
+  * the stream between two requests is visible to the second one. Both the
+  * serving plans and the rendered results are memoized per token: a new
+  * token swaps in a fresh serving set (one volatile reference), and within
+  * one a listing costs one collect and a repeated point lookup a map
+  * probe — the reference's Redis read path (the rendered view is the
+  * cache; the consumer's writes are the invalidation).
   */
 object HttpServe {
 
@@ -58,17 +59,26 @@ object HttpServe {
     case c => c.toString
   }
 
-  /** Render the typed view as the all-string read model. */
+  /** Render the typed view as the all-string read model. A live view's
+    * string timestamps are parsed ANSI-safely first, so an unparsable one
+    * renders "" as in the reference; typed timestamps render directly.
+    */
   def readModel(view: DataFrame): DataFrame = {
-    val rfc3339 = "yyyy-MM-dd'T'HH:mm:ssXXX"
+    def rfc3339(c: String) = {
+      val ts = view.schema(c).dataType match {
+        case StringType => TimeCodec.parseRfc3339(col(c))
+        case _ => col(c)
+      }
+      coalesce(date_format(ts, "yyyy-MM-dd'T'HH:mm:ssXXX"), lit("")).as(c)
+    }
     view.select(
       col("id"),
       coalesce(col("title"), lit("")).as("title"),
       coalesce(col("content"), lit("")).as("content"),
       coalesce(col("priority"), lit("")).as("priority"),
       coalesce(col("author"), lit("")).as("author"),
-      coalesce(date_format(col("created_at"), rfc3339), lit("")).as("created_at"),
-      coalesce(date_format(col("updated_at"), rfc3339), lit("")).as("updated_at"))
+      rfc3339("created_at"),
+      rfc3339("updated_at"))
   }
 
   private def rowJson(r: org.apache.spark.sql.Row): String =
@@ -76,12 +86,11 @@ object HttpServe {
       s""""${jsonEscape(f)}": "${jsonEscape(r.getAs[String](f))}""""
     }.mkString("{", ", ", "}")
 
-  /** What the server serves: a view plus a VERSION TOKEN. The serving
-    * layer re-resolves `generation` per request (cheap — a directory
-    * listing on the state store, nothing on a static view) and rebuilds
-    * its memoized plan set only when the token moves. On an object store
-    * a production deployment would cache the token with a short TTL;
-    * the invalidation contract is unchanged.
+  /** What the server serves: a view plus a version token. A token names
+    * one committed state, and `view` called after reading a token reads
+    * that state or a newer one. The serving layer re-resolves
+    * `generation` per request and rebuilds its serving set only when the
+    * token moves.
     */
   trait ViewSource {
     def generation: Long
@@ -94,25 +103,20 @@ object HttpServe {
     def view: DataFrame = v
   }
 
-  /** Live streaming state — the newest complete generation per bucket,
-    * exactly what [[graft.streaming.BucketedStateStore.read]] serves.
-    * The token is [[graft.streaming.BucketedStateStore.currentGenToken]]
-    * (per-bucket-gen SUM), not currentMaxGen: max() reaches its final
-    * value on a batch's FIRST bucket rename, so a request racing the
-    * sequential rename loop could memoize a mixed-generation view under
-    * a token that never moves again; the sum moves on every rename, so
-    * the completing batch invalidates it.
+  /** Live streaming state. The token is
+    * [[graft.streaming.BucketedStateStore.currentGenToken]], which names
+    * the store's newest log entry (one FS call); the view reads exactly
+    * one entry, the same or a newer one.
     */
   private final class LiveViewSource(proj: StreamingProjection) extends ViewSource {
     def generation: Long = proj.store.currentGenToken
     def view: DataFrame = proj.view
   }
 
-  /** One generation's serving set: the resolved view, its SignalStore
-    * (whose health probe + listing plans are one-time lazy costs), and
-    * the listing-plan memo. Swapped atomically as one unit when the
-    * source's generation moves — a request can never pair plan and memo
-    * from different generations.
+  /** One token's serving set: the resolved view, its SignalStore (whose
+    * health probe + listing plans are one-time lazy costs), and the
+    * listing-plan memo. Swapped atomically as one unit when the token
+    * moves, so a request never pairs plan and memo from different states.
     */
   private final class Serving(val gen: Long, val view: DataFrame) {
     val store = new SignalStore(view)
@@ -455,15 +459,13 @@ object HttpServe {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.setExecutor(handlerPool)
 
-    // Generation-checked swap: one volatile reference; requests in flight
-    // keep serving their generation's plans (parquet generation dirs are
-    // immutable, and retention keeps 2 per bucket so ONE generation of
-    // lag reads consistent files), new requests get the new set. A plan
-    // can still outlive retention when 2+ batches land on the same
-    // bucket during one request's collect() (1-second triggers make that
-    // reachable) — `attempt` below covers that residual window by
-    // retrying ONCE on a freshly-resolved serving set before failing the
-    // request.
+    // Token-checked swap: one volatile reference. The token is read
+    // before the view, so a set never holds an older state than its
+    // token names (a newer one only costs one more rebuild). Requests in
+    // flight keep their set: gen dirs are immutable, and the store keeps
+    // the 2 newest log entries. A collect that outlives that (2 commits
+    // during one request) fails, and `attempt` retries it once on a
+    // freshly resolved set.
     // Per-start lock: servers started in the same JVM must not share a
     // rebuild lock (a failure storm on one endpoint would serialize
     // serving-set rebuilds across ALL servers), so synchronize on a lock

@@ -1,38 +1,47 @@
 package graft.streaming
 
+import java.io.FileNotFoundException
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.projection.SignalProjection
 
 /** Keyed state table for the streaming projection: hash-bucketed parquet
-  * with per-bucket generations.
+  * generations, made visible one batch at a time by a generation log.
   *
-  * Layout: `dir/bucket=<b>/gen=<batchId>/part-*.parquet`
+  * Layout:
+  *   - `dir/bucket=<b>/gen=<g>/part-*.parquet`: bucket b as rewritten by
+  *     the commit of gen g (a bucket's gen is the commit that last
+  *     rewrote it);
+  *   - `dir/_log/<g>`: the entry that commits gen g. It maps every live
+  *     bucket to its gen, names the entry before it and records the
+  *     newest batch id folded into the state.
   *
-  * Why this shape (the 100 TB design):
-  *   - **Incremental merge.** A micro-batch only rewrites the buckets its
-  *     keys hash into: merge cost is O(touched state), not O(total state).
-  *     With B buckets and a batch touching k keys, at most min(k, B)
-  *     buckets are read+rewritten. B scales with state size (config), so
-  *     bucket files stay executor-memory-sized.
-  *   - **Idempotent replay = exactly-once.** Generations are named by the
-  *     Structured Streaming batchId. If a batch is replayed after a crash,
-  *     the same gen directory is rewritten and the swap is a no-op
-  *     semantically — the checkpoint + idempotent sink contract
-  *     (strictly stronger than the reference's at-least-once + idempotent
-  *     Redis apply, consumer.go:46-51).
-  *   - **Readers never block.** A query reads the latest complete
-  *     generation per bucket; an in-flight merge writes to a staging dir
-  *     and renames (the classic HDFS commit pattern; on object stores or
-  *     for multi-writer setups this slot is where a table format like
-  *     Delta/Iceberg would plug in).
+  * Invariants:
+  *   - **Atomic commits.** A commit's gen dirs land first; writing its
+  *     entry (temp + rename) is the one step that makes it visible.
+  *     Every read resolves one entry and reads exactly the gen dirs it
+  *     names, so a reader sees a prefix of the commit sequence, never a
+  *     mix (the Delta/Iceberg version-log pattern). Gens strictly grow
+  *     and are never reused, so the version token, the newest entry's
+  *     gen + 1 (0 before the first entry), names one committed state.
+  *   - **Incremental merge.** A batch reads and rewrites only the buckets
+  *     its keys hash into: O(touched state), not O(total state).
+  *   - **Exactly-once replay.** Batch ids are Structured Streaming batch
+  *     ids. Batch N commits as gen N, or as the next free gen when a
+  *     compaction or an adopted pre-log dir already took N. Replaying the
+  *     newest folded batch is a no-op; replaying one that crashed before
+  *     its entry rewrites gen dirs no entry names.
+  *   - **Retention.** The 2 newest entries are kept; a gen dir is deleted
+  *     once no kept entry names it. [[readAt]] serves any kept entry.
   *
-  * Tombstones (action='deleted') are retained in state so late replays of
-  * older events cannot resurrect deleted keys; [[compact]] drops them once
-  * the log horizon passes (the same role as Kafka compaction tombstone
-  * retention).
+  * Tombstones (action='deleted') stay in state so late replays of older
+  * events cannot resurrect deleted keys; [[compact]] drops them once the
+  * log horizon passes (Kafka's compaction tombstone retention).
   */
 class BucketedStateStore(
     spark: SparkSession,
@@ -42,12 +51,12 @@ class BucketedStateStore(
     seq: String = "seq") {
 
   private val root = new Path(dir)
+  private val logDir = new Path(root, "_log")
   private def fs: FileSystem =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Opt-in phase timing (`graft.store.diag=true`): prints each merge
-    * phase's wall to stderr so StreamDiag sessions can attribute the
-    * non-job addBatch time (driver FS round trips vs Spark jobs).
+    * phase's wall to stderr as `[store-diag] <phase> <ms> ms`.
     * Diagnostic only — never read in a query path.
     */
   private def diag[T](phase: String)(body: => T): T =
@@ -62,30 +71,18 @@ class BucketedStateStore(
 
   def bucketOf(c: Column): Column = pmod(xxhash64(c), lit(numBuckets))
 
-  /** Layout manifest (r16 review finding): `bucketOf` decides which
-    * buckets a merge reads AND where it writes, so reopening an existing
-    * state dir with a different `numBuckets`/`key`/`seq` silently splits
-    * keys across two bucket sets — merge never reads the old copy,
-    * read() unions and serves BOTH rows, and a tombstone can only ever
-    * hide one of them. The manifest is stamped on the store's first
-    * write (temp + rename, the `_dropped` marker discipline) and every
-    * instance validates against it ONCE before its first read or merge;
-    * a mismatch fails loudly with the original parameters in the
-    * message.
+  /** Layout manifest: `bucketOf` decides which buckets a merge reads and
+    * where it writes, so reopening a state dir with a different
+    * `numBuckets`/`key`/`seq` would split keys across two bucket sets.
+    * The manifest is stamped on the first write (temp + rename), and every
+    * instance validates against it once before its first read or merge.
     *
-    * Pre-manifest dirs (older checkpoints) get an EXPLICIT adoption gate
-    * (r16 ADVICE: the r16 form silently stamped the OPENING instance's
-    * parameters on first write — so opening an old checkpoint with the
-    * wrong numBuckets both performed the split-key merge the manifest
-    * exists to prevent AND canonized the wrong layout as manifest
-    * truth): first contact (read OR merge) with a manifest-less dir
-    * that already has bucket dirs throws unless
-    * `graft.store.adoptLayout=true`, and adoption validates the one
-    * direction the layout itself can refute — an existing `bucket=N`
-    * with N ≥ numBuckets proves the original store was wider (the
-    * other direction is unprovable from a sparse listing, which is why
-    * adoption is an explicit operator claim, not an inference). Fresh
-    * dirs (no bucket dirs yet) stamp on first write as before.
+    * A manifest-less dir that already has bucket dirs is refused unless
+    * `graft.store.adoptLayout=true` claims the opening parameters are the
+    * original ones; the claim is refuted when a `bucket=N` with
+    * N ≥ numBuckets exists. A validated adoption stamps the manifest at
+    * once; on the read path a failed stamp (a read-only consumer) only
+    * memoizes the validation for this instance.
     */
   private val manifestDesc = s"numBuckets=$numBuckets,key=$key,seq=$seq"
   private def manifestPath = new Path(root, "_store_manifest")
@@ -94,21 +91,13 @@ class BucketedStateStore(
     if (manifestOk) return
     val mp = manifestPath
     if (fs.exists(mp)) {
-      val in = fs.open(mp)
-      val got = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      finally in.close()
+      val got = readText(mp).trim
       require(got == manifestDesc,
         s"state dir $dir was written with [$got] but opened with " +
           s"[$manifestDesc] — a mismatched layout silently splits keys " +
           "across bucket sets; open the store with the original parameters")
       manifestOk = true
     } else {
-      // Manifest absent. A dir that ALREADY has bucket data predates the
-      // manifest — the opening instance's parameters are a claim, not a
-      // fact, so require the operator to make the claim explicitly
-      // before any read/merge touches the buckets (and refuse outright
-      // when the layout itself disproves it).
       val preManifest = allBuckets
       if (preManifest.nonEmpty) {
         require(spark.conf.getOption("graft.store.adoptLayout")
@@ -124,19 +113,6 @@ class BucketedStateStore(
           s"state dir $dir holds bucket=$maxB but was opened with " +
             s"numBuckets=$numBuckets — the original store was wider; " +
             "the adoption claim is refuted by the layout itself")
-        // Validated adoption STAMPS immediately, read path included (r17
-        // verdict #4: validate-only left manifestOk unset, so a read-only
-        // consumer of an adopted legacy dir re-listed every bucket and
-        // re-validated on every read until some merge stamped). Writing
-        // the manifest the operator just claimed IS the point of the
-        // claim — adoption is a one-time explicit upgrade action, after
-        // which the dir is an ordinary manifest'd store. On the READ
-        // path the stamp is best-effort (review finding: a consumer
-        // with r-x-only access to the dir could previously read an
-        // adopted legacy dir and now couldn't at all): a stamp failure
-        // logs and memoizes the validation for THIS instance only —
-        // the claim is not canonized, but reads proceed; a WRITE path
-        // failure propagates (a merge needs write access regardless).
         if (stampIfAbsent) stampManifest()
         else try stampManifest()
         catch { case scala.util.control.NonFatal(e) =>
@@ -152,52 +128,32 @@ class BucketedStateStore(
     }
   }
 
-  private def stampManifest(): Unit = {
-    val tmp = new Path(root, "_store_manifest.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(manifestDesc.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.rename(tmp, manifestPath)) manifestOk = true
+  private def stampManifest(): Unit =
+    if (commitText(new Path(root, "_store_manifest.tmp"), manifestPath,
+        manifestDesc)) manifestOk = true
     else {
-      // Hadoop filesystems report rename failure by returning false; the
-      // benign cause is a CONCURRENT stamper winning the race, in which
-      // case the manifest now exists and re-validating it terminates.
-      // Any other cause must fail loudly here — recursing while the
-      // manifest is still absent would re-enter the adoption branch and
-      // this method forever (review finding: the r18 refactor's
-      // adoption-path stamp closed that loop; the exists() guard is the
-      // termination proof).
+      // A false rename is benign only when a concurrent stamper won; the
+      // exists() guard keeps the re-validation from recursing forever.
       require(fs.exists(manifestPath),
         s"could not stamp layout manifest $manifestPath (rename returned " +
           "false and no concurrent stamp exists)")
       checkManifest(stampIfAbsent = false)
     }
+
+  private def readText(p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  }
+
+  /** Write `text` to `tmp`, then rename it to `dst`; the rename's result. */
+  private def commitText(tmp: Path, dst: Path, text: String): Boolean = {
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+    fs.rename(tmp, dst)
   }
 
   private def bucketPath(b: Long): Path = new Path(root, s"bucket=$b")
   private def genPath(b: Long, g: Long): Path = new Path(bucketPath(b), s"gen=$g")
-
-  private def listGens(b: Long): Seq[Long] = {
-    val bp = bucketPath(b)
-    if (!fs.exists(bp)) Seq.empty
-    else fs.listStatus(bp).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-      .map(_.getPath.getName.stripPrefix("gen=").toLong)
-  }
-
-  private def latestGenPaths(
-      buckets: Seq[Long], maxGen: Long = Long.MaxValue): Seq[String] =
-    buckets.flatMap { b =>
-      val gens = listGens(b).filter(_ <= maxGen)
-      if (gens.isEmpty) None
-      else {
-        // skip generations emptied by compaction (no data files)
-        val p = genPath(b, gens.max)
-        val hasData = fs.listStatus(p).exists(_.getPath.getName.startsWith("part-"))
-        if (hasData) Some(p.toString) else None
-      }
-    }
 
   private def allBuckets: Seq[Long] =
     if (!fs.exists(root)) Seq.empty
@@ -205,240 +161,208 @@ class BucketedStateStore(
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
       .map(_.getPath.getName.stripPrefix("bucket=").toLong)
 
-  /** Current state (tombstones included); None if no state yet. */
-  def read(): Option[DataFrame] = {
-    checkManifest(stampIfAbsent = false)
-    readBuckets(allBuckets)
+  /** One log entry: gen `gen` commits bucket → gen `buckets`; `prev` is
+    * the gen of the entry before it, -1 for the first; `batch` is the
+    * newest batch id folded into the state, -1 for none.
+    */
+  private case class Entry(gen: Long, prev: Long, batch: Long, buckets: Map[Long, Long])
+
+  private def entryPath(g: Long): Path = new Path(logDir, g.toString)
+
+  /** Gens of the retained entries, newest first: one FS call. */
+  private def logGens(): Seq[Long] =
+    try fs.listStatus(logDir).toSeq
+      .flatMap(_.getPath.getName.toLongOption).sorted.reverse
+    catch { case _: FileNotFoundException => Seq.empty }
+
+  private def readEntry(g: Long): Entry = {
+    val kv = readText(entryPath(g)).linesIterator.map { l =>
+      val Array(k, v) = l.split('='); k -> v.toLong
+    }.toMap
+    Entry(g, kv("prev"), kv("batch"),
+      (kv -- Seq("prev", "batch")).map { case (b, bg) => b.toLong -> bg })
   }
 
-  /** TIME-TRAVEL read: state as of generation `maxGen` (inclusive) —
-    * each bucket serves its newest generation ≤ maxGen; buckets first
-    * touched later have no state yet and contribute nothing. This is
-    * what the per-bucket generation layout buys beyond idempotent
-    * replay: any still-retained batch boundary is a consistent snapshot
-    * (the Delta/Iceberg version-read analog), bounded by the retention
-    * window (2 generations/bucket here; production sizes retention to
-    * its audit horizon).
-    *
-    * FAILS LOUDLY when the snapshot has aged out: a bucket whose needed
-    * generation was deleted by retention is indistinguishable from one
-    * first touched later by directory listing alone, and silently
-    * skipping it would return a cross-epoch mix. Retention therefore
-    * records each bucket's first-dropped generation (`_dropped` marker,
-    * written once = the minimum ever dropped); if a bucket has no
-    * retained generation ≤ maxGen but DID drop one ≤ maxGen, the
-    * snapshot is unservable and this throws instead of lying.
+  private def writeEntry(e: Entry): Unit = {
+    val text = (Seq(s"prev=${e.prev}", s"batch=${e.batch}") ++ e.buckets.toSeq.sorted.map {
+      case (b, g) => s"$b=$g" }).mkString("", "\n", "\n")
+    val dst = entryPath(e.gen)
+    require(commitText(new Path(logDir, s"${e.gen}.tmp"), dst, text),
+      s"could not commit log entry $dst")
+  }
+
+  /** First contact with the dir: validate the manifest and, for a dir
+    * written before the log existed (bucket dirs, no `_log`), commit one
+    * entry at its newest gen N naming each bucket's newest non-empty gen —
+    * the listing rule such a dir was read by. Its predecessor is taken as
+    * N - 1, so [[readAt]] reports the older batches as trimmed. Batch N
+    * may have crashed after renaming only some of its buckets, so the
+    * entry records N - 1 as the newest folded batch: a replay of N
+    * re-runs over it, and folding N into the buckets it already rewrote
+    * leaves them unchanged. From then on only the log is read.
     */
-  def readAt(maxGen: Long): Option[DataFrame] = {
+  @volatile private var opened = false
+  private def open(): Unit = {
     checkManifest(stampIfAbsent = false)
-    // ONE listing per bucket (r16 review finding: the aged-out guard and
-    // latestGenPaths each listed every bucket — doubled metadata RPCs on
-    // an object store): the guard decision and the served path come from
-    // the same listGens result.
-    val paths = allBuckets.flatMap { b =>
-      val eligible = listGens(b).filter(_ <= maxGen)
-      if (eligible.isEmpty) {
-        val marker = new Path(bucketPath(b), "_dropped")
-        if (fs.exists(marker)) {
-          val in = fs.open(marker)
-          val minDropped =
-            try new String(in.readAllBytes(),
-              java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-            finally in.close()
-          if (minDropped <= maxGen)
-            throw new IllegalStateException(
-              s"readAt($maxGen): bucket $b's generation <= $maxGen was " +
-                s"deleted by retention (oldest dropped: $minDropped) — " +
-                "the snapshot is no longer servable; raise retention or " +
-                "read a newer generation")
-        }
-        None
-      } else {
-        // skip generations emptied by compaction (no data files)
-        val p = genPath(b, eligible.max)
-        val hasData =
-          fs.listStatus(p).exists(_.getPath.getName.startsWith("part-"))
-        if (hasData) Some(p.toString) else None
+    if (!opened) synchronized {
+      if (!opened && !fs.exists(logDir)) {
+        val listed = allBuckets.map(b => b -> fs.listStatus(bucketPath(b)).toSeq
+          .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
+          .map(_.getPath.getName.stripPrefix("gen=").toLong))
+        val live = listed.flatMap { case (b, gs) =>
+          gs.maxOption.filter(g => fs.listStatus(genPath(b, g))
+            .exists(_.getPath.getName.startsWith("part-"))).map(b -> _)
+        }.toMap
+        listed.flatMap(_._2).maxOption.foreach(g => writeEntry(Entry(g, g - 1, g - 1, live)))
       }
+      opened = true
     }
-    if (paths.isEmpty) None else Some(readWithSchema(paths))
   }
 
-  /** The store's data-file schema, memoized per instance (r19, guide
-    * §1.2 step 1): `spark.read.parquet` re-infers the schema on every
-    * call — a footer-read job per micro-batch merge (~40-75 ms of driver
-    * wall, measured via `graft.store.diag`). The store's schema is
-    * invariant by construction (the manifest pins the layout, and every
-    * generation is written by the same [[SignalProjection.latestByKey]]
-    * fold — a drifted schema would already fail merge's unionByName), so
-    * the first write or first inferred read fixes it for the instance.
-    */
-  @volatile private var knownSchema: Option[org.apache.spark.sql.types.StructType] = None
+  /** Gens of the retained entries, newest first, of the opened store. */
+  private def openLog(): Seq[Long] = { open(); logGens() }
 
-  private def readWithSchema(paths: Seq[String]): DataFrame =
-    knownSchema match {
+  /** The newest entry, or None before the first commit. */
+  private def head(): Option[Entry] = openLog().headOption.map(readEntry)
+
+  /** The store's data-file schema, memoized per instance: every gen is
+    * written by the same [[SignalProjection.latestByKey]] fold under one
+    * manifest, so the first write or inferred read fixes it and later
+    * reads skip a footer-inference job.
+    */
+  @volatile private var knownSchema: Option[StructType] = None
+
+  /** Rows of the given bucket → gen dirs; None when there are none. */
+  private def readGens(gens: Map[Long, Long]): Option[DataFrame] = {
+    val paths = gens.toSeq.sorted.map { case (b, g) => genPath(b, g).toString }
+    if (paths.isEmpty) None
+    else Some(knownSchema match {
       case Some(sc) => spark.read.schema(sc).parquet(paths: _*)
       case None =>
         val df = spark.read.parquet(paths: _*)
         knownSchema = Some(df.schema)
         df
-    }
-
-  private def readBuckets(buckets: Seq[Long]): Option[DataFrame] = {
-    val paths = latestGenPaths(buckets)
-    if (paths.isEmpty) None else Some(readWithSchema(paths))
+    })
   }
 
-  /** Merge one micro-batch (already reduced to per-key latest) into state.
-    * Only buckets containing batch keys are read and rewritten.
+  private def onlyBuckets(e: Entry, buckets: Seq[Long]): Map[Long, Long] =
+    e.buckets.filter { case (b, _) => buckets.contains(b) }
+
+  /** Current state (tombstones included); None if no state yet. */
+  def read(): Option[DataFrame] = head().flatMap(e => readGens(e.buckets))
+
+  /** State as of gen `maxGen`: the newest retained entry ≤ maxGen. A
+    * stream's gens are its batch ids until a compaction or an adoption
+    * takes one. None before the first entry; throws when the entries that
+    * could answer were trimmed by retention.
+    */
+  def readAt(maxGen: Long): Option[DataFrame] = {
+    val gens = openLog()
+    gens.find(_ <= maxGen) match {
+      case Some(g) => readGens(readEntry(g).buckets)
+      case None =>
+        val oldest = gens.lastOption.map(readEntry)
+        if (oldest.exists(_.prev >= 0))
+          throw new IllegalStateException(
+            s"readAt($maxGen): the entries up to gen ${oldest.get.prev} " +
+              "were trimmed by retention — the snapshot is no longer " +
+              "servable; raise retention or read a newer generation")
+        None
+    }
+  }
+
+  /** Merge one micro-batch (already reduced to per-key latest) into state
+    * as batch `gen`. Only buckets containing batch keys are read and
+    * rewritten. A replay of the newest folded batch is a no-op; an older
+    * batch is refused.
     */
   def merge(batchLatest: DataFrame, gen: Long): Unit = {
-    checkManifest(stampIfAbsent = false)
+    val gens = openLog()
+    val cur = gens.headOption.map(readEntry)
+    cur.foreach(e => require(e.batch <= gen,
+      s"merge gen=$gen is older than batch ${e.batch}, the newest one folded in"))
+    if (cur.exists(_.batch == gen)) return
     val withBucket = batchLatest.withColumn("_bucket", bucketOf(col(key)))
-    // Tiny driver-side collect: at most numBuckets longs (config-bounded,
-    // scale-independent) — not a data collect.
+    // Driver collect of at most numBuckets longs, not a data collect.
     val affected = diag("merge.affected-probe") {
       withBucket.select(col("_bucket")).distinct()
         .collect().map(_.getLong(0)).toSeq.sorted
     }
     if (affected.isEmpty) return
 
-    val oldState = diag("merge.read-old")(readBuckets(affected))
+    val oldState = diag("merge.read-old")(cur.flatMap(e => readGens(onlyBuckets(e, affected))))
       .map(_.withColumn("_bucket", bucketOf(col(key))))
     val combined = oldState match {
       case Some(old) => old.unionByName(withBucket)
       case None => withBucket
     }
-    // ONE exchange per merge, not two (r18, guide §2.1): repartition to
-    // the bucket layout the write needs FIRST, then fold grouped by
-    // (_bucket, key) — _bucket is a function of the key, so the fold is
-    // unchanged, and the bucket partitioning satisfies the aggregate's
-    // distribution, eliding the fold's own key shuffle. (Both inputs are
-    // already per-key latest — the batch by foreachBatch's reduction, the
-    // old state by construction — so the dropped map-side combine had
-    // nothing to combine.)
+    // One exchange: repartition to the write's bucket layout first, then
+    // fold grouped by (_bucket, key). _bucket is a function of the key, so
+    // the fold is unchanged and needs no key shuffle of its own.
     val merged = SignalProjection.latestByKey(
       combined.repartition(numBuckets, col("_bucket")), key, seq,
       alsoGroup = Seq("_bucket"))
-    diag("merge.write-buckets")(
-      writeBuckets(merged, affected, gen, prePartitioned = true))
+    val next = math.max(gen, cur.fold(0L)(_.gen + 1))
+    commit(merged, affected, next, gen, gens, cur, prePartitioned = true)
   }
 
-  /** Write `data` (carrying a `_bucket` column) as generation `gen` of
-    * every bucket in `affected` — buckets with no rows get an empty
-    * generation, which supersedes (hides) their older data.
+  /** Commit `data` (carrying a `_bucket` column) as gen `gen`, folding up
+    * to batch `batch`: write each bucket in `affected` as `gen=<gen>` (a
+    * bucket left with no rows drops out of the entry), then the entry,
+    * then apply retention.
     */
-  private def writeBuckets(data: DataFrame, affected: Seq[Long], gen: Long,
-      prePartitioned: Boolean = false): Unit = {
+  private def commit(data: DataFrame, affected: Seq[Long], gen: Long, batch: Long,
+      gens: Seq[Long], cur: Option[Entry], prePartitioned: Boolean = false): Unit = {
     val staging = new Path(root, s"_staging_gen_$gen")
     fs.delete(staging, true)
-    // co-locate each bucket into one task before the partitioned write:
-    // one file per bucket per generation instead of (shuffle-partitions ×
-    // buckets) small files — fewer renames, and readers open exactly one
-    // file per bucket. At larger state, raise numBuckets, not files/bucket
-    // — and note numBuckets now ALSO bounds the merge fold's CPU
-    // parallelism (r18 ADVICE: the one-exchange merge repartitions to
-    // numBuckets before the fold, so a small-numBuckets store folds on
-    // few tasks; size B to state volume AND the cores a merge should use).
-    // `prePartitioned` callers (merge) already hold exactly this layout —
-    // re-shuffling it here would undo the one-exchange plan they built.
+    // One task per bucket, so one file per bucket per gen. numBuckets
+    // therefore also bounds the merge fold's parallelism.
     val laid = if (prePartitioned) data
       else data.repartition(numBuckets, col("_bucket"))
     diag("write.staging-job")(
       laid.write.partitionBy("_bucket").parquet(staging.toString))
-    // The staged data files carry exactly this schema minus the partition
-    // column — seed the read-path memo so the NEXT merge skips footer
-    // inference (see [[readWithSchema]]).
     if (knownSchema.isEmpty)
-      knownSchema = Some(org.apache.spark.sql.types.StructType(
-        data.schema.fields.filterNot(_.name == "_bucket")))
-
-    // Stamp/validate the layout manifest once the root exists (the
-    // staging write above created it on a fresh store).
+      knownSchema = Some(StructType(data.schema.fields.filterNot(_.name == "_bucket")))
     checkManifest(stampIfAbsent = true)
+    // The log dir exists before any bucket dir a commit renames, so a dir
+    // with bucket dirs and no `_log` is always one written before the log.
+    if (cur.isEmpty) fs.mkdirs(logDir)
 
-    // Commit each bucket's generation. The per-bucket sequence
-    // (delete → verify-gone → rename → retention) is the exactly-once
-    // contract and is UNCHANGED; buckets touch disjoint paths, so the
-    // commits run CONCURRENTLY (r19, guide §2.1 applied to metadata:
-    // on an object store each bucket costs a handful of RPC round
-    // trips, and serializing B buckets multiplies that latency by B —
-    // bounded pool, failures propagate and fail the batch exactly like
-    // the sequential loop did).
-    diag("write.commit-loop")(forEachConcurrently(affected)(commitBucket(_, staging, gen)))
-    fs.delete(staging, true)
-  }
-
-  /** One bucket's generation commit — the exactly-once sequence
-    * extracted verbatim from the r16-r18 sequential loop (see the inline
-    * comments for each step's failure-mode rationale).
-    */
-  private def commitBucket(b: Long, staging: Path, gen: Long): Unit = {
-    val src = new Path(staging, s"_bucket=$b")
-    val dst = genPath(b, gen)
-    fs.delete(dst, true) // idempotent replay of the same batchId
-    // fs.delete reports failure by returning FALSE like rename below;
-    // renaming into a still-existing dst is the nastier failure — HDFS
-    // then moves src INSIDE dst (gen=N/_bucket=b/part-*), whose
-    // underscore dir is invisible to Spark and to the part- hasData
-    // check, so the generation reads EMPTY and supersedes the bucket's
-    // older data: a silent wipe. Verify the target is gone before
-    // renaming (r16 review finding).
-    require(!fs.exists(dst),
-      s"could not delete existing $dst for idempotent replay — failing " +
-        "the batch so the checkpoint retries instead of committing an " +
-        "empty generation")
-    fs.mkdirs(dst.getParent)
-    // ONE listing per bucket per commit (r19): the retention decision
-    // below needs this bucket's generation set AFTER the rename, which
-    // is exactly (pre-rename gens ∪ {gen}) — the rename adds gen and
-    // the delete above removed any stale copy of it — so list BEFORE
-    // the rename and derive, instead of a second listStatus after.
-    val oldGens = listGens(b).filter(_ != gen)
-    if (fs.exists(src)) {
-      // Hadoop FileSystems report most rename failures by returning
-      // FALSE (quota, concurrent delete, S3A copy failure) — not by
-      // throwing. Swallowing it would let foreachBatch commit the
-      // batchId with the generation never created: a silent
-      // exactly-once violation readers can't detect. Fail the batch
-      // so the checkpoint retries it.
+    val staged = fs.listStatus(staging).map(_.getPath.getName).toSet
+    val written = affected.filter(b => staged(s"_bucket=$b"))
+    // Buckets touch disjoint paths, so they commit concurrently.
+    diag("write.commit-loop")(forEachConcurrently(written) { b =>
+      val dst = genPath(b, gen)
+      // A crashed attempt of this batch may have left dst; renaming into
+      // an existing dir would nest the new files inside it.
+      if (fs.exists(dst))
+        require(fs.delete(dst, true), s"could not delete stale $dst")
+      if (!cur.exists(_.buckets.contains(b))) fs.mkdirs(bucketPath(b))
+      // Hadoop reports most rename failures by returning false.
+      val src = new Path(staging, s"_bucket=$b")
       require(fs.rename(src, dst), s"rename $src -> $dst failed")
-    } else fs.mkdirs(dst) // bucket emptied (e.g. by compaction)
-    // retain only the 2 newest generations per bucket; record the FIRST
-    // drop (the minimum ever, since oldest go first) so readAt can fail
-    // loudly on aged-out snapshots instead of silently skipping.
-    // Marker commit is write-temp-then-rename: a crash mid-write must
-    // not leave an empty marker that turns readAt's diagnostic into a
-    // NumberFormatException.
-    val dropped = (oldGens :+ gen).sorted.dropRight(2)
-    dropped.headOption.foreach { g0 =>
-      val marker = new Path(bucketPath(b), "_dropped")
-      // The marker is written once and never deleted — memoize its
-      // existence per instance so steady-state batches skip the probe.
-      if (!markerKnown.contains(b) && !fs.exists(marker)) {
-        val tmp = new Path(bucketPath(b), "_dropped.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(g0.toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        require(fs.rename(tmp, marker), s"rename $tmp -> $marker failed")
-      }
-      markerKnown.add(b)
-      ()
-    }
-    dropped.foreach(g => fs.delete(genPath(b, g), true))
-  }
+    })
+    val base = cur.map(_.buckets).getOrElse(Map.empty[Long, Long])
+    val next = Entry(gen, cur.map(_.gen).getOrElse(-1L), batch,
+      base -- affected ++ written.map(_ -> gen))
+    writeEntry(next)
+    fs.delete(staging, true)
 
-  /** Buckets whose `_dropped` retention marker is known to exist (it is
-    * write-once) — saves one FS probe per bucket per steady-state batch.
-    */
-  private val markerKnown =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    // Retention: keep `next` and its predecessor; delete the older
+    // entries and the gen dirs only they name. Dirs go first, so a crash
+    // here leaves the entry for the next commit to trim again.
+    val kept = (next.buckets.toSeq ++ cur.toSeq.flatMap(_.buckets)).toSet
+    gens.drop(1).foreach { g =>
+      readEntry(g).buckets.filterNot(kept).foreach { case (b, bg) =>
+        fs.delete(genPath(b, bg), true)
+      }
+      fs.delete(entryPath(g), false)
+    }
+  }
 
   /** Run `body` over the buckets on a bounded pool; any failure
-    * propagates (unwrapped) and fails the batch, preserving the
-    * sequential loop's abort semantics. Single-element and empty inputs
-    * stay on the calling thread.
+    * propagates (unwrapped) and fails the batch. Single-element and empty
+    * inputs stay on the calling thread.
     */
   private def forEachConcurrently(buckets: Seq[Long])(body: Long => Unit): Unit = {
     val par = math.min(buckets.size, 8)
@@ -457,100 +381,63 @@ class BucketedStateStore(
     }
   }
 
-  /** Newest generation across all buckets; -1 if the store is empty. */
-  def currentMaxGen: Long =
-    allBuckets.flatMap(listGens).foldLeft(-1L)(math.max)
+  /** Gen of the newest entry; -1 if the store is empty. */
+  def currentMaxGen: Long = openLog().headOption.getOrElse(-1L)
 
-  /** Version TOKEN for serving-layer cache invalidation: the SUM over
-    * buckets of (newest generation + 1). [[currentMaxGen]] is wrong for
-    * that job — a multi-bucket batch renames bucket dirs sequentially,
-    * and max() already reaches its final value on the FIRST rename, so a
-    * reader racing the batch could cache a mixed view under a token that
-    * never moves again. The sum moves with EVERY bucket rename.
-    *
-    * The +1 per bucket (r16 review finding): with the raw gen sum, an
-    * EMPTY store (no buckets, token 0) and the store right after
-    * micro-batch 0 (every touched bucket's max gen = the batchId 0,
-    * token 0) were indistinguishable — a server whose first request
-    * cached the empty view before batch 0 committed would keep serving
-    * it until batch 1; and a bucket dir created by mkdirs before its
-    * first rename contributed −1, letting the token transiently DECREASE
-    * into a collision with a pre-batch value. With +1: empty store = 0,
-    * any committed generation ≥ 1, a gen-less bucket dir contributes 0 —
-    * the token strictly increases with every completed rename.
+  /** Version token for serving-layer cache invalidation: the newest
+    * entry's gen + 1, or 0 before the first entry. It names exactly one
+    * committed state and costs one FS call once the store is open.
     */
-  def currentGenToken: Long =
-    allBuckets.map(b => listGens(b).foldLeft(-1L)(math.max) + 1).sum
+  def currentGenToken: Long = openLog().headOption.fold(0L)(_ + 1)
 
-  /** Drop tombstones older than `horizonSeq` (log-compaction analog),
-    * writing the compacted buckets as generation `currentMaxGen + 1` —
-    * the only gen that supersedes every existing one WITHOUT shadowing
-    * future `merge(batchId)` writes. Returns the gen readers should
-    * treat as current (resume the stream with batchIds above it): the
-    * new gen if any bucket was rewritten, else the unchanged max (a
-    * tombstone-free store compacts to a no-op — no empty generation
-    * churn).
+  /** Drop tombstones older than `horizonSeq`, committed as gen
+    * `currentMaxGen + 1`. Returns that gen if any bucket was rewritten,
+    * else the unchanged current gen. A stream resumed afterwards may
+    * merge that gen's batch id: the batch commits at the next free gen.
     */
   def compact(horizonSeq: Long): Long = {
     val g = currentMaxGen + 1
     if (compact(horizonSeq, g).nonEmpty) g else g - 1
   }
 
-  /** Drop tombstones older than `horizonSeq` (log-compaction analog).
-    * BUCKET-SELECTIVE: only buckets that actually hold a pre-horizon
-    * tombstone are read and rewritten — untouched buckets keep their
-    * current generation files verbatim (readers always take the newest
-    * generation per bucket, so serving mixed generations is the normal
-    * read path — the same property `readAt` proves). At 100× state size
-    * a compaction epoch therefore costs O(buckets-with-old-tombstones),
-    * not O(total state). Returns the rewritten bucket ids.
+  /** Drop tombstones older than `horizonSeq` (log-compaction analog),
+    * committed as gen `gen`. Only buckets holding a pre-horizon
+    * tombstone are read and rewritten; the entry keeps every other
+    * bucket's gen. Returns the rewritten bucket ids.
     *
-    * The rewrite is deliberately not `merge`, which can only upsert: a
-    * merge would resurrect the tombstones from the old generation it
-    * unions with.
+    * The rewrite is not `merge`, which can only upsert: it would
+    * resurrect the tombstones from the old gen it unions with.
     *
-    * `gen` must be strictly newer than every existing generation (readers
-    * serve the newest gen per bucket, so anything else would be a no-op
-    * shadowed by current state) and finite: a sentinel like Long.MaxValue
-    * would permanently shadow every later merge(batchId) — and retention
-    * keeps the top-2 gens, so the wedge would never age out. Prefer the
-    * 1-arg overload, which derives the successor gen itself.
+    * `gen` must be newer than the newest entry and finite: a sentinel
+    * like Long.MaxValue would leave no gen for a later merge to commit
+    * at. Prefer the 1-arg overload.
     */
   def compact(horizonSeq: Long, gen: Long): Seq[Long] = {
-    val cur = currentMaxGen
-    require(gen > cur && gen < Long.MaxValue,
+    val gens = openLog()
+    val cur = gens.headOption.map(readEntry)
+    val curGen = cur.map(_.gen).getOrElse(-1L)
+    require(gen > curGen && gen < Long.MaxValue,
       s"compact gen=$gen must be a finite generation newer than the " +
-        s"current max ($cur); use compact(horizonSeq) to derive it")
-    read() match {
+        s"current max ($curGen); use compact(horizonSeq) to derive it")
+    cur.flatMap(e => readGens(e.buckets)) match {
       case None => Seq.empty
       case Some(st) =>
-        // Tombstone compaction is a SIGNAL-schema operation on an
-        // otherwise schema-generic store (key/seq are parameters, the
-        // tombstone marker is not): fail loudly and early on a store
-        // without the signal action column (s14's claims store, s12's
-        // struct-ordered store) instead of an opaque AnalysisException
-        // mid-scan — and share the ONE Deleted constant so a marker
-        // change can never silently turn compact into a no-op that
-        // retains every tombstone forever (r16 review finding).
+        // Compaction needs the signal schema's `action` column; the store
+        // itself is schema-generic (s12's and s14's stores lack it).
         require(st.columns.contains("action"),
           s"compact() requires the signal read-model 'action' column; " +
             s"this store's schema is [${st.columns.mkString(", ")}]")
-        val tombstone =
-          col("action") === graft.domain.SignalSchema.Deleted
-        // Which buckets hold a pre-horizon tombstone? One filtered scan
-        // (the action/seq predicates push down to the parquet readers),
-        // then a driver collect bounded by numBuckets longs — config-
-        // bounded like merge()'s, never a data collect.
-        val affected = st
-          .where(tombstone && col(seq) < horizonSeq)
+        val oldTombstone = col("action") === graft.domain.SignalSchema.Deleted &&
+          col(seq) < horizonSeq
+        // One filtered scan, then a driver collect of ≤ numBuckets longs.
+        val affected = st.where(oldTombstone)
           .select(bucketOf(col(key)).as("_bucket")).distinct()
           .collect().map(_.getLong(0)).toSeq.sorted
         if (affected.nonEmpty) {
-          val kept = readBuckets(affected).get
-            .where(!(col("action") === graft.domain.SignalSchema.Deleted &&
-              col(seq) < horizonSeq))
+          val kept = readGens(onlyBuckets(cur.get, affected)).get
+            .where(!oldTombstone)
             .withColumn("_bucket", bucketOf(col(key)))
-          writeBuckets(kept, affected, gen)
+          commit(kept, affected, gen, cur.get.batch, gens, cur)
         }
         affected
     }

@@ -612,11 +612,10 @@ object StreamingPack extends QueryPack {
       q.awaitTermination()
       val horizon = DerivedSignalLog.log(s, dir)
         .agg(max(col("seq"))).head().getLong(0) / 2
-      // Compaction generation derived by the store (currentMaxGen + 1):
-      // strictly newer than any replay batchId so readers pick it up,
-      // but finite — a MaxValue sentinel would permanently shadow every
-      // later merge — and the per-bucket 2-generation retention then
-      // ages the pre-compaction state out.
+      // The store commits the compaction as gen currentMaxGen + 1, a
+      // log entry newer than every replayed batch; retention keeps the 2
+      // newest entries, so the pre-compaction state ages out one commit
+      // later.
       proj.store.compact(horizon)
       proj.store.read()
         .getOrElse(sys.error("s13: no state written"))
@@ -681,18 +680,16 @@ object StreamingPack extends QueryPack {
         .orderBy("doc_id")
     }),
 
-    // s15: TIME-TRAVEL state read — what the per-bucket generation layout
-    // buys beyond idempotent replay: any retained batch boundary is a
-    // consistent snapshot (the Delta/Iceberg version-read analog). The
-    // log replays through the s1 projection in two micro-batches (the
-    // parity wire: odd seqs in batch 0, even in batch 1), then the view
-    // is read AS OF generation 0 — per bucket, the newest generation ≤ 0;
-    // buckets first touched by batch 1 have no snapshot and contribute
-    // nothing. The oracle folds ONLY the odd-seq half: the snapshot must
-    // equal the projection of exactly the events consumed by that batch,
-    // proving generations are batch-consistent, not merely replayable.
-    // Retention bounds how far back readAt reaches (2 gens/bucket here;
-    // production sizes retention to its audit horizon).
+    // s15: TIME-TRAVEL state read — what the generation log buys beyond
+    // idempotent replay: every retained log entry is a consistent
+    // snapshot (the Delta/Iceberg version-read analog). The log replays
+    // through the s1 projection in two micro-batches (the parity wire:
+    // odd seqs in batch 0, even in batch 1), then the view is read AS OF
+    // generation 0 — the entry batch 0 committed. The oracle folds ONLY
+    // the odd-seq half: the snapshot must equal the projection of exactly
+    // the events consumed by that batch. Retention bounds how far back
+    // readAt reaches (the 2 newest entries here; production sizes
+    // retention to its audit horizon).
     "s15_state_time_travel" -> ((s, dir) => {
       val tmp = scratch("graft-s15-")
       val wire = stagedLateWire(s, dir) // (seq, ets, value): ets unused here

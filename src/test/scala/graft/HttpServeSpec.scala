@@ -212,6 +212,31 @@ class HttpServeSpec extends SparkSuite {
     } finally liveServer.stop(0)
   }
 
+  test("live serving: an unparsable created_at renders \"\" and the row still answers 200") {
+    // Spark 4's ANSI cast throws on 'not-a-date'; the reference renders an
+    // unparsable timestamp as "" and sorts it oldest.
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-live3-").toFile.getAbsolutePath
+    Seq(0L -> """{"action":"created","id":"bad-ts","title":"t","content":"c","priority":"High","author":"a","created_at":"not-a-date","updated_at":"2026-01-01T00:00:00Z"}""")
+      .toDF("seq", "value").coalesce(1).write.json(s"$dir/events")
+    val proj = new graft.streaming.StreamingProjection(spark, s"$dir/state", numBuckets = 4)
+    proj.runFileStream(s"$dir/events", s"$dir/chk").awaitTermination()
+    val liveServer = HttpServe.startLive(spark, proj, port = 0)
+    try {
+      val liveBase = s"http://127.0.0.1:${liveServer.getAddress.getPort}"
+      def fetch(path: String) = client.send(
+        HttpRequest.newBuilder(URI.create(s"$liveBase$path")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      Seq("/signals", "/signals?priority=High", "/signals/bad-ts").foreach { p =>
+        val r = fetch(p)
+        assert(r.statusCode() == 200, s"$p: ${r.body()}")
+        assert(r.body().contains(""""id": "bad-ts""""), s"$p: ${r.body()}")
+        assert(r.body().contains(""""created_at": """""), s"$p: ${r.body()}")
+        assert(r.body().contains(""""updated_at": "2026-01-01T00:00:00Z""""), s"$p: ${r.body()}")
+      }
+    } finally liveServer.stop(0)
+  }
+
   test("retry policy: fatal errors propagate immediately, with no rebuild and no second collect") {
     // VERDICT r11 #5 / ADVICE: the old `attempt` caught Throwable and
     // answered an OutOfMemoryError with a full serving-set rebuild plus a

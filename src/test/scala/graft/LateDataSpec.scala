@@ -124,10 +124,9 @@ class LateDataSpec extends SparkSuite {
   }
 
   test("readAt fails loudly when the requested snapshot was aged out by retention") {
-    // 3 merges into a 1-bucket store: the 2-generation retention drops
-    // gen 0. A bucket with no generation <= 0 is then ambiguous from the
-    // listing alone (first-touched-later vs aged-out) — readAt must THROW
-    // on the aged-out case, never silently return a cross-epoch mix.
+    // 3 merges into a 1-bucket store: keeping the 2 newest log entries
+    // trims entry 0. readAt(0) must THROW, never answer from a newer
+    // entry or report an empty store.
     import spark.implicits._
     val store = new BucketedStateStore(spark, tmpDir(), numBuckets = 1)
     store.merge(Seq((1L, "a", "created")).toDF("seq", "id", "action"), gen = 0)

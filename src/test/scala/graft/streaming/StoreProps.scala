@@ -61,6 +61,65 @@ class StoreProps extends SparkSuite {
     }
   }
 
+  test("a reader beside the writer only ever sees the fold of a batch prefix") {
+    // One thread merges a random log cut into batches while the test
+    // thread loops token → read() → collect. Every read must equal the
+    // fold of exactly the first k batches for some k; a read that mixes
+    // buckets of two batches matches no prefix. Listings are slowed so a
+    // read's resolution spans a commit's renames. A read whose snapshot
+    // was trimmed by retention while it ran may fail; it is retried, and
+    // never counts as an answer.
+    FaultFs.register(spark)
+    val rng = new scala.util.Random(7)
+    val ids = (0 until 16).map(i => s"k$i")
+    val log = (0 until 160).map(i => Ev(i.toLong, ids(rng.nextInt(ids.size)),
+      Seq("created", "updated", "deleted")(rng.nextInt(3)))).toList
+    val batches = log.grouped(8).toList
+    def fold(evs: Seq[Ev]): Set[(String, Long, String)] =
+      evs.groupBy(_.id).values.map(_.maxBy(_.seq)).map(e => (e.id, e.seq, e.action)).toSet
+    val prefixes = batches.indices.map(k => fold(batches.take(k).flatten)).toSet +
+      fold(log)
+    val decoded = batches.map(b =>
+      SignalProjection.latestByKey(SignalProjection.decode(raw(b))).localCheckpoint(true))
+
+    val store = new BucketedStateStore(spark, FaultFs.tempDir("graft-reader-"), numBuckets = 8)
+    @volatile var writerError: Option[Throwable] = None
+    val writer = new Thread(() =>
+      try decoded.zipWithIndex.foreach { case (b, i) => store.merge(b, i.toLong) }
+      catch { case t: Throwable => writerError = Some(t) })
+    def current(): Set[(String, Long, String)] =
+      store.read().fold(Set.empty[(String, Long, String)])(_
+        .select("id", "seq", "action").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet)
+    def trimmed(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(c =>
+        c.isInstanceOf[java.io.FileNotFoundException] ||
+          String.valueOf(c.getMessage).contains("FILE_NOT_EXIST"))
+    FaultFs.listDelayMs = 2
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Set[(String, Long, String)]]
+    var token = 0L
+    try {
+      writer.start()
+      while (writer.isAlive) {
+        val t = store.currentGenToken
+        assert(t >= token, s"token went back from $token to $t")
+        token = t
+        val got = try Some(current())
+          catch { case scala.util.control.NonFatal(e) if trimmed(e) => None }
+        got.foreach { s =>
+          assert(prefixes.contains(s), s"read #${seen.size} matches no batch prefix: $s")
+          seen += s
+        }
+      }
+    } finally {
+      FaultFs.listDelayMs = 0
+      writer.join()
+    }
+    assert(writerError.isEmpty, writerError)
+    assert(seen.distinct.size >= 3, s"the reader saw only ${seen.distinct.size} states")
+    assert(current() == fold(log))
+  }
+
   test("merge folds with ONE exchange and still writes one file per bucket per gen") {
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft-onex-").toString
@@ -113,9 +172,9 @@ class StoreProps extends SparkSuite {
   test("gen token: 0 only when empty, moves on batch 0, and a layout mismatch fails loudly") {
     val dir = Files.createTempDirectory("graft-token-").toString
     val store = new BucketedStateStore(spark, dir, numBuckets = 4)
-    // r16 review finding: the raw gen SUM read 0 both for an empty store
-    // and right after micro-batch 0 (batchIds start at 0), so a serving
-    // layer that cached the empty view under token 0 never invalidated
+    // batch ids start at 0, so the token must still tell the empty store
+    // from the store after batch 0, or a serving layer that cached the
+    // empty view under token 0 would never invalidate it
     assert(store.currentGenToken == 0L)
     val evs = Seq(Ev(0L, "a", "created"), Ev(1L, "b", "created"))
     store.merge(
@@ -212,9 +271,10 @@ class StoreProps extends SparkSuite {
     // The 100×-state property: compact(horizon) rewrites ONLY buckets
     // holding a pre-horizon tombstone. Equivalence — the post-compaction
     // read must equal the batch fold with pre-horizon tombstones dropped
-    // (exactly what a full-state rewrite would serve) — and the
-    // untouched buckets' parquet files must be the SAME files (path,
-    // length, mtime), not byte-equal rewrites.
+    // (exactly what a full-state rewrite would serve) — and the files the
+    // untouched buckets serve (each bucket's newest gen) must be the SAME
+    // files (path, length, mtime), not byte-equal rewrites. Older gens
+    // are retention's to delete.
     import org.apache.spark.sql.functions.col
     (1L to 5L).foreach { seed =>
       val log = genLog(Gen.Parameters.default, Seed(seed * 101)).get
@@ -234,7 +294,11 @@ class StoreProps extends SparkSuite {
       def fileSnap(): Map[String, (Long, Long)] = {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(dir))
+        new java.io.File(dir).listFiles().toSeq
+          .filter(_.getName.startsWith("bucket="))
+          .flatMap(_.listFiles().filter(_.getName.startsWith("gen="))
+            .maxByOption(_.getName.stripPrefix("gen=").toLong))
+          .flatMap(walk)
           .filter(_.getName.endsWith(".parquet"))
           .map(f => f.getPath -> (f.length(), f.lastModified())).toMap
       }
@@ -264,8 +328,8 @@ class StoreProps extends SparkSuite {
   }
 
   test("readAt composes with retention and compaction: aged snapshots fail loudly, newer ones serve") {
-    // Three merges age generation 0 out of retention (top-2 kept per
-    // bucket), then compact() rewrites all state at the derived successor
+    // Three merges age generation 0 out of retention (the 2 newest log
+    // entries are kept), then compact() rewrites state at the derived successor
     // gen — after which every pre-retention snapshot must THROW the
     // unservable-snapshot error (a silent skip would return a cross-epoch
     // mix), while still-retained and post-compaction reads serve.
@@ -283,8 +347,7 @@ class StoreProps extends SparkSuite {
       store.merge(
         SignalProjection.latestByKey(SignalProjection.decode(raw(b))), i.toLong)
     }
-    // gen 0 aged out of some bucket (a-d all touched thrice; ≤4 buckets
-    // means at least one holds such a key) — snapshot 0 is unservable
+    // entry 0 was trimmed — snapshot 0 is unservable
     val e0 = intercept[IllegalStateException](store.readAt(0L))
     assert(e0.getMessage.contains("no longer servable"), e0.getMessage)
 
@@ -298,8 +361,8 @@ class StoreProps extends SparkSuite {
     assert(at2.where(col("action") === "deleted").collect()
       .map(_.getAs[String]("id")).toSeq == Seq("e"))
 
-    // gens 0 and 1 are gone (compaction's rewrite pushed 1 out of the
-    // top-2 for the thrice-touched buckets): both fail loudly
+    // entries 0 and 1 are gone (compaction's entry pushed 1 out of the
+    // 2 newest): both fail loudly
     intercept[IllegalStateException](store.readAt(1L))
     intercept[IllegalStateException](store.readAt(0L))
 
