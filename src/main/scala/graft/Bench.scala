@@ -160,9 +160,9 @@ object Bench {
     }
   }
 
-  /** SPARK_GRAFT_CONF=k=v,k=v runtime-conf injection — the Bench/
-    * ServeLatency dev-loop contract, ONE definition so the parse cannot
-    * drift between tools. Returns the raw env value (empty when unset)
+  /** SPARK_GRAFT_CONF=k=v,k=v runtime-conf injection — the dev-loop
+    * contract of Bench and the tools, ONE definition so the parse cannot
+    * drift between them. Returns the raw env value (empty when unset)
     * so a tool can echo the applied confs into its record.
     */
   private[graft] def injectConf(spark: SparkSession): String = {
@@ -258,8 +258,8 @@ object Bench {
     // confs before any query runs — the scaling capture uses it to force
     // operator path selection (e.g. graft.components.maxUnionFindEdges=0
     // drives d7's at-scale propagation path on real data). The driver
-    // never sets it. ONE definition shared with ServeLatency (the other
-    // tool on this contract).
+    // never sets it. ONE definition shared with the tools on this
+    // contract (HttpChaos, StreamDiag).
     injectConf(spark)
     // warmup: touch every table once (schema + a tiny codegen'd action)
     Tables.all.foreach { t =>

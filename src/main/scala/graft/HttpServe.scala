@@ -23,8 +23,8 @@ import graft.streaming.StreamingProjection
   *
   * Response rows are the all-string read model (domain/signal.go:47-55):
   * typed columns internally, strings rendered at the edge (RFC3339
-  * timestamps). A serving layer, not an engine operator: each request is a
-  * Catalyst-planned query over the materialized view.
+  * timestamps). A serving layer, not an engine operator: each uncached
+  * listing or point lookup is a Catalyst-planned query over the view.
   *
   * LIVE serving (the reference's consumer-feeds-reads loop,
   * handler/signal.go:30-46 reading the Redis view the running consumer
@@ -37,6 +37,20 @@ import graft.streaming.StreamingProjection
   * one a listing costs one collect and a repeated point lookup a map
   * probe — the reference's Redis read path (the rendered view is the
   * cache; the consumer's writes are the invalidation).
+  *
+  * Health and point lookups, the reference's PING and HGETALL:
+  *   - `/health` answers 200 when the current token resolves to a serving
+  *     set, and 503 when that resolution throws. It runs no Spark job:
+  *     the token costs one log listing, which every request pays, and a
+  *     set is resolved once per token. A failed resolution is not kept,
+  *     so the first request after a repair answers 200.
+  *   - A live point lookup computes the key's bucket on the driver and
+  *     reads only the gen dir that the serving set's log entry names for
+  *     that bucket: one job of one task over one file. When the entry
+  *     names no gen for the bucket, the answer is 404 with no job. Other
+  *     sources filter the whole view, also in one job. Neither uses
+  *     `limit`: the view holds at most one row per id, and `limit` would
+  *     only add `executeTake`'s widening jobs.
   */
 object HttpServe {
 
@@ -45,8 +59,8 @@ object HttpServe {
   // JVM — this object initializer runs before any start()). Without it,
   // every keep-alive response written as headers+body (two small writes)
   // rides Nagle against the client's delayed ACK: a flat ~40 ms floor on
-  // cached responses (measured — the ServeLatency clients saw 44 ms p50
-  // on bodies curl fetched in 1 ms over fresh connections).
+  // cached responses (measured: keep-alive clients saw 44 ms p50 on
+  // bodies curl fetched in 1 ms over fresh connections).
   System.setProperty("sun.net.httpserver.nodelay", "true")
 
   def jsonEscape(s: String): String = s.flatMap {
@@ -89,12 +103,25 @@ object HttpServe {
   /** What the server serves: a view plus a version token. A token names
     * one committed state, and `view` called after reading a token reads
     * that state or a newer one. The serving layer re-resolves
-    * `generation` per request and rebuilds its serving set only when the
-    * token moves.
+    * `generation` per request and rebuilds its serving set, through
+    * `resolve`, only when the token moves.
     */
   trait ViewSource {
     def generation: Long
     def view: DataFrame
+
+    /** One serving set's state, resolved once per token after
+      * `generation`. The default resolves `view`.
+      */
+    def resolve(): Resolved = new Resolved(view)
+  }
+
+  /** One serving set's state: its view, and the rows a point lookup
+    * collects for an id, or None when the state can hold no row with it.
+    * The default lookup filters the whole view.
+    */
+  class Resolved(val view: DataFrame) {
+    def lookup(id: String): Option[DataFrame] = Some(view.where(col("id") === id))
   }
 
   /** Static batch view — generation never moves, plans memoized forever. */
@@ -105,21 +132,34 @@ object HttpServe {
 
   /** Live streaming state. The token is
     * [[graft.streaming.BucketedStateStore.currentGenToken]], which names
-    * the store's newest log entry (one FS call); the view reads exactly
-    * one entry, the same or a newer one.
+    * the store's newest log entry (one FS call). A resolved set reads one
+    * entry, the same or a newer one: the view over every gen it names,
+    * and for a point lookup only the gen of the key's bucket. Each
+    * bucket's frame is built on its first lookup, so a request plans only
+    * its `where`.
     */
   private final class LiveViewSource(proj: StreamingProjection) extends ViewSource {
     def generation: Long = proj.store.currentGenToken
     def view: DataFrame = proj.view
+    override def resolve(): Resolved = {
+      val snap = proj.store.snapshot()
+      val buckets = new java.util.concurrent.ConcurrentHashMap[Long, Option[DataFrame]]()
+      new Resolved(proj.viewOf(snap.read())) {
+        override def lookup(id: String): Option[DataFrame] =
+          buckets.computeIfAbsent(proj.store.bucketOf(id),
+            b => snap.readBucket(b).map(st => proj.viewOf(Some(st))))
+            .map(_.where(col("id") === id))
+      }
+    }
   }
 
-  /** One token's serving set: the resolved view, its SignalStore (whose
-    * health probe + listing plans are one-time lazy costs), and the
-    * listing-plan memo. Swapped atomically as one unit when the token
+  /** One token's serving set: the resolved state, its SignalStore (whose
+    * listing plans are one-time lazy costs), the listing-plan memo and
+    * the body caches. Swapped atomically as one unit when the token
     * moves, so a request never pairs plan and memo from different states.
     */
-  private final class Serving(val gen: Long, val view: DataFrame) {
-    val store = new SignalStore(view)
+  private final class Serving(val gen: Long, state: Resolved) {
+    val store = new SignalStore(state.view)
     // Serving-plan memo: the listing surface has a FIXED set of distinct
     // plans (default newest-first + one per priority LABEL in the
     // reference's domain), so each is analyzed/optimized/planned ONCE
@@ -145,23 +185,17 @@ object HttpServe {
       if (memoizable(priority)) memo.computeIfAbsent(priority, build)
       else build(priority)
 
-    // RESULT memo (r14 verdict #3): memoizing the PLAN still executed
-    // the top-50 collect per request (§10 measured list p50 176 ms at
-    // generation-cache hit rate 1.0 — all plan hits, all paying the
-    // collect). The rendered JSON bodies are cached instead, keyed
-    // exactly like the plans and generation-scoped BY CONSTRUCTION:
-    // the caches live inside this Serving, the volatile swap replaces
-    // the whole Serving when the source's generation token moves, and
-    // a generation's parquet files are immutable — so a cached body can
-    // never outlive its data (the reference's read path is precisely
-    // this: Redis IS the rendered result, invalidated by the consumer's
-    // writes). Listings: the same bounded 4-key domain as the plan
-    // memo. Point lookups: per-id bodies INCLUDING misses (a 404 is as
-    // immutable as a hit within a generation), bounded by a true LRU
-    // (r15 verdict #4 — the earlier clear-on-full dropped the hot keys
-    // along with the cold tail whenever key-uniform traffic crossed the
-    // bound; the LRU keeps re-referenced keys resident no matter how
-    // many distinct cold keys stream past).
+    // Result memo: a memoized plan still runs its collect per request,
+    // so the rendered JSON bodies are cached, keyed like the plans. They
+    // are scoped to the token by construction: the caches live inside
+    // this Serving, the swap replaces the whole Serving when the token
+    // moves, and a generation's parquet files are immutable, so a body
+    // never outlives its data (Redis is the reference's rendered result,
+    // invalidated by the consumer's writes). Listings use the same
+    // bounded 4-key domain as the plan memo. Point lookups cache per-id
+    // bodies, misses included (a 404 is as immutable as a hit within a
+    // token), in an LRU that keeps re-referenced keys resident however
+    // many distinct cold keys stream past.
     private val listingBodies =
       new java.util.concurrent.ConcurrentHashMap[Option[String], String]()
     def listingBody(priority: Option[String]): String = {
@@ -174,17 +208,11 @@ object HttpServe {
       new LruBodyCache[String, Option[String]](PointCacheMax)
     def pointBody(id: String): Option[String] =
       pointBodies.get(id) {
-        readModel(view.where(col("id") === id)).limit(1).collect()
-          .headOption.map(rowJson)
+        state.lookup(id).flatMap(readModel(_).collect().headOption.map(rowJson))
       }
   }
 
   private[graft] val PointCacheMax = 4096
-
-  /** Probe-sample count for the healthTtlAutoK derivation — enough for a
-    * stable median, cheap enough to pay once at server start.
-    */
-  private[graft] val TtlProbeSamples = 5
 
   /** Bounded LRU body cache (r15 verdict #4). Access-ordered
     * LinkedHashMap with eldest-entry eviction; the compute runs OUTSIDE
@@ -238,137 +266,6 @@ object HttpServe {
       map.synchronized(map.containsKey(k))
     private[graft] def size: Int = map.synchronized(map.size())
   }
-
-  /** TTL verdict cache for the health route (r15 verdict #5 / builder's
-    * own #1): `graft.serve.healthTtlMs` = 0 (the DEFAULT) keeps today's
-    * contract — every probe executes, a probe should probe; a nonzero
-    * TTL serves the memoized verdict for at most ttlMs, taking the
-    * per-request execute (~12-15 ms p50) off a production traffic path
-    * with a STATED staleness bound. ASYMMETRIC (r16 verdict "what's
-    * wrong" #3): only HEALTHY verdicts are SERVED from cache — an
-    * unhealthy probe result re-probes on the very next request, so
-    * recovery is visible immediately instead of up to ttlMs late, at the
-    * same cost (during an outage every request probes, exactly the
-    * default-off behavior; the TTL only shields the healthy steady
-    * state, which is where the traffic is). Probe failures propagate and
-    * are never cached.
-    *
-    * Stores are ASYMMETRIC under races, mirroring the serving asymmetry
-    * (r17 ADVICE, tightened by this round's own review): a HEALTHY
-    * result stores by COMPARE-AND-SET against the verdict read at entry
-    * — if ANY probe stored since (healthy or not), that evidence is
-    * newer and the stale healthy result must not overwrite it (the r17
-    * last-writer-wins form let a slow pre-outage healthy probe cache
-    * "ok" for a full TTL right after an observed failure). An UNHEALTHY
-    * result stores UNCONDITIONALLY — it is never served from cache, it
-    * only forces future requests to re-probe, so recording it can only
-    * cost probes, never a wrong 200; a CAS here would be the opposite
-    * bug (review finding: a fast healthy store winning the slot made a
-    * NEWER unhealthy observation lose its CAS and the outage ride the
-    * TTL). Stale-unhealthy-clobbers-newer-healthy is the accepted
-    * residual: it forces re-probes until the next healthy probe, the
-    * safe direction by construction.
-    *
-    * The ttl is a SUPPLIER (r17 verdict #3): [[AutoTtl]] re-derives the
-    * bound on a slow cadence, and each get() reads the current value.
-    * Injected clock so the spec pins the bound deterministically.
-    */
-  private[graft] final class TtlVerdict(ttl: () => Long, now: () => Long) {
-    def this(ttlMs: Long, now: () => Long) = this(() => ttlMs, now)
-    def this(ttlMs: Long) = this(ttlMs, () => System.nanoTime())
-    private final class V(val ok: Boolean, val at: Long)
-    private val last = new java.util.concurrent.atomic.AtomicReference[V](null)
-    def get(probe: => Boolean): Boolean = {
-      val ttlMs = ttl()
-      if (ttlMs <= 0) probe
-      else {
-        val v0 = last.get()
-        val t = now()
-        if (v0 != null && v0.ok && t - v0.at < ttlMs * 1000000L) true
-        else {
-          val v = probe
-          if (v) last.compareAndSet(v0, new V(true, now()))
-          else last.set(new V(false, now()))
-          v
-        }
-      }
-    }
-  }
-
-  /** Slow-cadence TTL re-derivation (r17 verdict #3): the r17 form
-    * derived ttl = k × probe p50 ONCE at server start, freezing a
-    * long-lived server's staleness bound at startup probe cost — plan
-    * cache growth or store growth drifts the probe's real cost out from
-    * under the bound. The evidence is now the SERVED TRAFFIC itself:
-    * every executed probe's duration lands in a bounded ring of the
-    * newest [[TtlProbeSamples]] observations, and at most once per
-    * `rederiveMs` (conf `graft.serve.healthTtlRederiveMs`, default
-    * [[DefaultRederiveMs]]; 0 keeps the startup value forever) the ttl
-    * re-derives over the ring — no dedicated probe traffic after
-    * startup. Self-healing corollary: a startup whose derivation probes
-    * failed (empty live store) starts at ttl 0 = default-off and
-    * derives a real bound from its first served probes at the first
-    * cadence tick. An explicit `graft.serve.healthTtlMs` never
-    * constructs this class at all — the manual dial stays absolute.
-    */
-  private[graft] final class AutoTtl(k: Long, rederiveMs: Long,
-      initialTtlMs: Long, initialSamples: Seq[Double],
-      now: () => Long = () => System.nanoTime()) {
-    private val ring = new java.util.ArrayDeque[java.lang.Double]()
-    initialSamples.takeRight(TtlProbeSamples)
-      .foreach(d => ring.addLast(d))
-    @volatile private var ttlMs = initialTtlMs
-    @volatile private var nextAt = now() + rederiveMs * 1000000L
-    def current: Long = ttlMs
-    def observe(probeMs: Double): Unit = {
-      // derivation + write stay INSIDE the lock (review finding: a
-      // thread stalled between snapshot and write could overwrite a
-      // newer tick's bound with its stale one a cadence later); the
-      // p50 over ≤ 5 doubles costs nothing at once-per-cadence
-      val derived: Option[(Long, Long, Int)] = ring.synchronized {
-        ring.addLast(probeMs)
-        while (ring.size > TtlProbeSamples) ring.removeFirst()
-        if (rederiveMs > 0 && now() >= nextAt) {
-          nextAt = now() + rederiveMs * 1000000L
-          import scala.jdk.CollectionConverters._
-          val t = derivedTtlMs(ring.asScala.map(_.doubleValue()).toSeq, k)
-          val prev = ttlMs
-          ttlMs = t
-          if (t != prev) Some((t, prev, ring.size)) else None
-        } else None
-      }
-      derived.foreach { case (t, prev, n) =>
-        System.err.println(
-          s"[http] re-derived healthTtlMs=$t (was $prev; k=$k over the " +
-            s"last $n served probes)")
-      }
-    }
-  }
-
-  /** Default re-derivation cadence: long enough that the derivation cost
-    * (a p50 over ≤ 5 doubles) and the log line are invisible, short
-    * enough that a drifting probe cost is tracked within minutes.
-    */
-  private[graft] val DefaultRederiveMs = 300000L
-
-  /** Production TTL derived from the probe's OWN measured cost (r16
-    * verdict's #5 ask — the deploy gets the number from evidence, not a
-    * guess): ttl = k × the measured probe p50. The rationale is an
-    * amortization bound: with ttl = k·p50, a steady request stream pays
-    * at most one probe per k probe-lengths of wall time — i.e. the probe
-    * consumes ≤ 1/k of the health route's serving capacity — while
-    * staleness stays ≤ k·p50 (for the HEALTHY verdict only; [[
-    * TtlVerdict]] never caches unhealthy). p50 (the median, lower of the
-    * two middles at even n) rather than mean: one GC-outlier probe must
-    * not inflate the deploy's staleness bound. Empty samples or k ≤ 0
-    * derive 0 = the default-off contract.
-    */
-  private[graft] def derivedTtlMs(probeMs: Seq[Double], k: Long): Long =
-    if (probeMs.isEmpty || k <= 0) 0L
-    else {
-      val p50 = probeMs.sorted.apply((probeMs.size - 1) / 2)
-      math.ceil(k * p50).toLong
-    }
 
   def main(args: Array[String]): Unit = {
     val spark = SessionDefaults(SparkSession.builder()
@@ -472,6 +369,9 @@ object HttpServe {
     // owned by this start() call, never on the HttpServe singleton.
     val rebuildLock = new Object
     @volatile var serving: Serving = null
+    def rebuild(g: Long): Serving = {
+      val n = new Serving(g, source.resolve()); serving = n; n
+    }
     def current(): Serving = {
       val g = source.generation
       val s = serving
@@ -479,15 +379,11 @@ object HttpServe {
       else rebuildLock.synchronized {
         val again = serving
         val g2 = source.generation
-        if (again != null && again.gen == g2) again
-        else { val n = new Serving(g2, source.view); serving = n; n }
+        if (again != null && again.gen == g2) again else rebuild(g2)
       }
     }
     def attempt[T](body: Serving => T): T =
-      retryOnce(current(), rebuildLock.synchronized {
-        val f = new Serving(source.generation, source.view)
-        serving = f; f
-      })(body)
+      retryOnce(current(), rebuildLock.synchronized(rebuild(source.generation)))(body)
 
     def respond(ex: HttpExchange, code: Int, body: String): Unit = {
       val bytes = body.getBytes(StandardCharsets.UTF_8)
@@ -497,69 +393,9 @@ object HttpServe {
       ex.close()
     }
 
-    // graft.serve.healthTtlMs: 0 (default) = per-request probe (today's
-    // semantics, unchanged); > 0 = serve the memoized healthy verdict for
-    // at most that many ms (see [[TtlVerdict]]). When it is UNSET and
-    // graft.serve.healthTtlAutoK > 0, the TTL is DERIVED from evidence
-    // instead of guessed ([[derivedTtlMs]]): the probe runs
-    // TtlProbeSamples times against the startup serving set,
-    // ttl = k × measured p50, and thereafter RE-derives on a slow
-    // cadence from the served probes themselves ([[AutoTtl]] — r17
-    // verdict #3). An explicit healthTtlMs always wins over the
-    // derivation (fixed forever, no re-derivation); neither conf set
-    // keeps the default-off contract.
-    val explicitTtl =
-      spark.conf.getOption("graft.serve.healthTtlMs").map(_.toLong)
-    val autoTtl: Option[AutoTtl] =
-      if (explicitTtl.nonEmpty) None
-      else {
-        val k = spark.conf.getOption("graft.serve.healthTtlAutoK")
-          .map(_.toLong).getOrElse(0L)
-        if (k <= 0) None
-        else {
-          val samples =
-            try (1 to TtlProbeSamples).map { _ =>
-              val t0 = System.nanoTime()
-              attempt(_.store.health)
-              (System.nanoTime() - t0) / 1e6
-            }
-            catch { case scala.util.control.NonFatal(e) =>
-              // a probe that can't run yet (empty live store at startup)
-              // must not wedge server start — start at default-off; the
-              // cadence derives a real bound from the first served probes
-              System.err.println(
-                s"[http] healthTtlAutoK derivation probe failed (${e.getMessage}); TTL starts 0")
-              Seq.empty[Double]
-            }
-          val ttl = derivedTtlMs(samples, k)
-          val cadence = spark.conf.getOption("graft.serve.healthTtlRederiveMs")
-            .map(_.toLong).getOrElse(DefaultRederiveMs)
-          System.err.println(s"[http] derived healthTtlMs=$ttl " +
-            s"(k=$k, probe samples ${samples.map(m => f"$m%.1f").mkString("[", ",", "]")} ms; " +
-            s"re-derive cadence ${cadence}ms)")
-          Some(new AutoTtl(k, cadence, ttl, samples))
-        }
-      }
-    val healthVerdict = new TtlVerdict(
-      () => explicitTtl.orElse(autoTtl.map(_.current)).getOrElse(0L),
-      () => System.nanoTime())
-    // Each EXECUTED probe is timed and fed to the re-derivation ring —
-    // the staleness bound tracks what probes actually cost this server,
-    // with zero dedicated probe traffic after startup.
-    def timedProbe(): Boolean = {
-      val t0 = System.nanoTime()
-      val r = attempt(_.store.health)
-      autoTtl.foreach(_.observe((System.nanoTime() - t0) / 1e6))
-      r
-    }
     server.createContext("/health", (ex: HttpExchange) =>
-      try {
-        if (healthVerdict.get(timedProbe()))
-          respond(ex, 200, """{"status":"ok"}""")
-        else respond(ex, 503, """{"status":"down"}""")
-      } catch {
-        case _: Throwable => respond(ex, 503, """{"status":"down"}""")
-      })
+      try { current(); respond(ex, 200, """{"status":"ok"}""") }
+      catch { case _: Throwable => respond(ex, 503, """{"status":"down"}""") })
 
     server.createContext("/signals", (ex: HttpExchange) => {
       val path = ex.getRequestURI.getPath

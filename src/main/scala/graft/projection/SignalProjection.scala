@@ -21,14 +21,17 @@ import graft.domain.SignalSchema
   *     (projection/signal_test.go:132-151) — `max_by` over a duplicated log
   *     returns the same row.
   *
-  * Scale design: the fold is a single hash aggregation
-  * (`groupBy(key).agg(max_by(struct(...), seq))`). `max_by` is a
-  * declarative aggregate, so Spark performs map-side partial aggregation:
-  * each of the N input partitions reduces to ≤ |distinct keys in partition|
-  * rows before the one shuffle on `key`. No join, no sort, no window — this
-  * is the plan that survives a 1000-executor / 100 TB event log. Skewed hot
-  * keys are bounded by partial aggregation (each map task emits one row per
-  * hot key).
+  * Scale design: the fold is one aggregation
+  * (`groupBy(key).agg(max_by(struct(...), seq))`) with one shuffle on
+  * `key`. `max_by` is a declarative aggregate, so Spark performs map-side
+  * partial aggregation: each of the N input partitions reduces to
+  * ≤ |distinct keys in partition| rows before the shuffle, and skewed hot
+  * keys are bounded (each map task emits one row per hot key). No join,
+  * no window. It is not a hash aggregation: the `max_by` buffer holds a
+  * struct of strings, which is variable-width, and HashAggregate needs
+  * fixed-width mutable buffers. So it plans as partial SortAggregate →
+  * Sort → Exchange → SortAggregate → Sort, one sort on each side of the
+  * shuffle (`explain`, Spark 4.1.2).
   */
 object SignalProjection {
 

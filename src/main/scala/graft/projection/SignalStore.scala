@@ -65,10 +65,11 @@ class SignalStore(view: DataFrame) {
   }
 
   /** Q3: point lookup; absent id → None (reference: ErrNotFound/404,
-    * handler/signal.go:48-60).
+    * handler/signal.go:48-60). One job: the view holds at most one row
+    * per id, and a `limit` would only add `executeTake`'s widening jobs.
     */
   def findById(id: String): Option[Row] =
-    view.where(col("id") === id).limit(1).collect().headOption
+    view.where(col("id") === id).collect().headOption
 
   /** Q5: health probe — a trivial action proving the view is servable
     * (reference: Redis PING, projection/signal.go:111-113).

@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -70,6 +71,12 @@ class BucketedStateStore(
     }
 
   def bucketOf(c: Column): Column = pmod(xxhash64(c), lit(numBuckets))
+
+  /** [[bucketOf]] of a string key, evaluated on the driver: the same
+    * xxhash64 expression and pmod, with no job.
+    */
+  def bucketOf(id: String): Long =
+    Math.floorMod(new XxHash64(Seq(Literal(id))).eval().asInstanceOf[Long], numBuckets.toLong)
 
   /** Layout manifest: `bucketOf` decides which buckets a merge reads and
     * where it writes, so reopening a state dir with a different
@@ -248,8 +255,21 @@ class BucketedStateStore(
   private def onlyBuckets(e: Entry, buckets: Seq[Long]): Map[Long, Long] =
     e.buckets.filter { case (b, _) => buckets.contains(b) }
 
+  /** One committed state: the bucket → gen map of one log entry. */
+  final class Snapshot private[BucketedStateStore] (gens: Map[Long, Long]) {
+    /** All of the state (tombstones included); None if there is none. */
+    def read(): Option[DataFrame] = readGens(gens)
+
+    /** Bucket `b` alone; None when the entry names no gen for it. */
+    def readBucket(b: Long): Option[DataFrame] =
+      gens.get(b).flatMap(g => readGens(Map(b -> g)))
+  }
+
+  /** The newest entry's state: one log listing and one entry read. */
+  def snapshot(): Snapshot = new Snapshot(head().fold(Map.empty[Long, Long])(_.buckets))
+
   /** Current state (tombstones included); None if no state yet. */
-  def read(): Option[DataFrame] = head().flatMap(e => readGens(e.buckets))
+  def read(): Option[DataFrame] = snapshot().read()
 
   /** State as of gen `maxGen`: the newest retained entry ≤ maxGen. A
     * stream's gens are its batch ids until a compaction or an adoption

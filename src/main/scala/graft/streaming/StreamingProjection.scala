@@ -74,7 +74,10 @@ class StreamingProjection(
     * — so positional consumers (union-by-position, tuple encoders, which
     * bind by ordinal) see one shape whether or not state exists yet.
     */
-  def view: DataFrame = store.read() match {
+  def view: DataFrame = viewOf(store.read())
+
+  /** The view over one read of the state (None: no state yet). */
+  def viewOf(state: Option[DataFrame]): DataFrame = state match {
     case Some(st) => st.where(col("action") =!= SignalSchema.Deleted)
     case None =>
       val schema = SignalSchema.eventSchema.fields.filterNot(_.name == "id")

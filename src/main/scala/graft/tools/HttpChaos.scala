@@ -81,10 +81,9 @@ object HttpChaos {
     if (args.length > 1 && args(1).nonEmpty) builder.config("spark.jars", args(1))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF=k=v,k=v — the Bench/ServeLatency injector, ONE
-    // shared definition, so a chaos run can drive the serving dials
-    // (e.g. the r18 TTL re-derivation) through the same contract; the
-    // applied confs ride in the JSON line so the record is
+    // SPARK_GRAFT_CONF=k=v,k=v — Bench's injector, ONE shared
+    // definition, so a chaos run can set runtime confs through the same
+    // contract; the applied confs ride in the JSON line so the record is
     // self-describing.
     val injectedConf = graft.Bench.injectConf(spark)
     val load1 = java.lang.management.ManagementFactory

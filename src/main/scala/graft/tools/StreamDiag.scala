@@ -40,7 +40,7 @@ object StreamDiag {
       )
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Same SPARK_GRAFT_CONF contract as Bench/ServeLatency (e.g.
+    // Same SPARK_GRAFT_CONF contract as Bench and HttpChaos (e.g.
     // graft.store.diag=true for the store's phase timing).
     graft.Bench.injectConf(spark)
     // The context-level bus sees StreamingQueryListener events from every

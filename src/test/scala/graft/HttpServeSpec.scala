@@ -378,165 +378,106 @@ class HttpServeSpec extends SparkSuite {
     }
   }
 
-  test("health TTL: default OFF probes every request; a nonzero TTL bounds staleness") {
-    var probes = 0
-    def probe: Boolean = { probes += 1; true }
-    // default (0): every get executes the probe — a probe should probe
-    val off = new HttpServe.TtlVerdict(0L)
-    (1 to 5).foreach(_ => assert(off.get(probe)))
-    assert(probes == 5)
-    // TTL on, injected clock: within the window the verdict is served
-    // memoized; at/after the window it re-probes — staleness ≤ ttlMs
-    probes = 0
-    var nowNs = 0L
-    val on = new HttpServe.TtlVerdict(100L, () => nowNs)
-    assert(on.get(probe)); assert(probes == 1)
-    nowNs = 99L * 1000000L
-    assert(on.get(probe)); assert(probes == 1) // inside the bound: cached
-    nowNs = 100L * 1000000L
-    assert(on.get(probe)); assert(probes == 2) // bound reached: re-probed
-    // a probe FAILURE propagates and is never cached
-    nowNs = 300L * 1000000L
-    intercept[RuntimeException] { on.get(sys.error("probe down")) }
-    assert(on.get(probe)); assert(probes == 3)
+  /** Task counts of the Spark jobs `body` runs, one per job. The listener
+    * bus delivers in order, so a marker job run before and after `body`
+    * brackets exactly its jobs.
+    */
+  private def jobsDuring(body: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[Option[Int]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.put(
+        if (Option(e.properties).exists(_.getProperty("graft.marker") != null)) None
+        else Some(e.stageInfos.map(_.numTasks).sum))
+    }
+    def mark(): Seq[Int] = {
+      sc.setLocalProperty("graft.marker", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.marker", null)
+      Iterator.continually(seen.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .map(e => { assert(e != null, "listener bus did not deliver the marker"); e })
+        .takeWhile(_.nonEmpty).map(_.get).toSeq
+    }
+    sc.addSparkListener(listener)
+    try { mark(); body; mark() } finally sc.removeSparkListener(listener)
   }
 
-  test("health TTL is asymmetric: unhealthy verdicts are never cached, recovery is immediate") {
-    // r16 verdict "what's wrong" #3: caching a false verdict for the TTL
-    // made a RECOVERED store serve 503 for up to ttlMs. Only healthy
-    // verdicts ride the cache — an unhealthy result re-probes on the
-    // very next request.
-    var probes = 0
-    var healthy = false
-    def probe: Boolean = { probes += 1; healthy }
-    var nowNs = 0L
-    val v = new HttpServe.TtlVerdict(100L, () => nowNs)
-    assert(!v.get(probe)); assert(probes == 1)
-    // still inside what WOULD be the TTL window: a false verdict must
-    // not be served from cache — the probe runs again
-    nowNs = 1L * 1000000L
-    assert(!v.get(probe)); assert(probes == 2)
-    // the store recovers: the next request sees it IMMEDIATELY
-    healthy = true
-    nowNs = 2L * 1000000L
-    assert(v.get(probe)); assert(probes == 3)
-    // ...and the healthy verdict now caches for the TTL as before
-    nowNs = 101L * 1000000L
-    assert(v.get(probe)); assert(probes == 3)
-    nowNs = 102L * 1000000L
-    assert(v.get(probe)); assert(probes == 4)
+  private def liveEvent(seq: Long, id: String): (Long, String) =
+    seq -> s"""{"action":"created","id":"$id","title":"t","content":"c","priority":"High","author":"a","created_at":"2026-01-01T00:00:00Z","updated_at":"2026-01-01T00:00:00Z"}"""
+
+  test("jobs per request: health none, a live point hit or miss one job of one task, a bucket with no gen none, a static lookup one") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobs-").toFile.getAbsolutePath
+    val proj = new graft.streaming.StreamingProjection(spark, s"$dir/state", numBuckets = 4)
+    def ingest(ev: (Long, String)): Unit = {
+      Seq(ev).toDF("seq", "value").coalesce(1).write.mode("append").json(s"$dir/events")
+      proj.runFileStream(s"$dir/events", s"$dir/chk").awaitTermination()
+    }
+    ingest(liveEvent(0L, "j0"))
+    val liveServer = HttpServe.startLive(spark, proj, port = 0)
+    try {
+      val liveBase = s"http://127.0.0.1:${liveServer.getAddress.getPort}"
+      def fetch(path: String, code: Int): Unit = {
+        val r = client.send(HttpRequest.newBuilder(URI.create(s"$liveBase$path")).GET().build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == code, s"$path: ${r.body()}")
+      }
+      val b = proj.store.bucketOf("j0")
+      val probes = (0 until 64).map(i => s"probe-$i")
+      val sameBucket = probes.find(proj.store.bucketOf(_) == b).get
+      val noGen = probes.find(proj.store.bucketOf(_) != b).get
+
+      fetch("/signals", 200) // resolves the serving set
+      assert(jobsDuring(fetch("/health", 200)).isEmpty)
+      assert(jobsDuring(fetch("/signals/j0", 200)) == Seq(1))
+      assert(jobsDuring(fetch(s"/signals/$sameBucket", 404)) == Seq(1))
+      assert(jobsDuring(fetch(s"/signals/$noGen", 404)).isEmpty)
+      // the request that resolves a new token runs no job either
+      ingest(liveEvent(1L, "j1"))
+      assert(jobsDuring(fetch("/health", 200)).isEmpty)
+      assert(jobsDuring(fetch("/signals/j1", 200)) == Seq(1))
+    } finally liveServer.stop(0)
+
+    view.count()
+    val staticId = view.select("id").collect().last.getString(0)
+    assert(jobsDuring(assert(get(s"/signals/$staticId").statusCode() == 200)).size == 1)
+    assert(jobsDuring(assert(get("/signals/static-miss").statusCode() == 404)).size == 1)
   }
 
-  test("TtlVerdict stores by CAS: a stale healthy probe cannot overwrite a newer observed failure") {
-    // r17 ADVICE: the last-writer-wins store let a SLOW healthy probe —
-    // started before an outage — land after a newer probe had already
-    // observed unhealthy, caching "ok" for a full TTL right after the
-    // observed failure. Interleave the two probes deterministically:
-    // A enters on an empty cache; while its probe is "in flight", B runs
-    // a COMPLETE get that observes the outage; A then returns healthy.
-    var probes = 0
-    var nowNs = 0L
-    val v = new HttpServe.TtlVerdict(100L, () => nowNs)
-    assert(v.get({
-      // B: entered after A, completed first, observed the outage
-      assert(!v.get({ probes += 1; false }))
-      probes += 1
-      true // A's stale healthy result, completing after B
-    })) // A's own caller still gets A's own result
-    nowNs = 1L * 1000000L
-    // inside what WOULD be A's TTL window: A's store lost the CAS (B's
-    // evidence is newer — including this both-entered-empty case, which
-    // the null-reset form left open), so the next request RE-PROBES
-    assert(!v.get({ probes += 1; false }))
-    assert(probes == 3)
-    // recovery then caches normally: the un-raced healthy store works
-    nowNs = 2L * 1000000L
-    assert(v.get({ probes += 1; true }))
-    nowNs = 3L * 1000000L
-    assert(v.get({ probes += 1; sys.error("must be cached") }))
-    assert(probes == 4)
-  }
+  test("health is not cached: an unresolvable newest entry answers 503 until repaired, then 200 at once") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-health-").toFile.getAbsolutePath
+    val proj = new graft.streaming.StreamingProjection(spark, s"$dir/state", numBuckets = 4)
+    def ingest(ev: (Long, String)): Unit = {
+      Seq(ev).toDF("seq", "value").coalesce(1).write.mode("append").json(s"$dir/events")
+      proj.runFileStream(s"$dir/events", s"$dir/chk").awaitTermination()
+    }
+    ingest(liveEvent(0L, "h0"))
+    val liveServer = HttpServe.startLive(spark, proj, port = 0)
+    try {
+      val liveBase = s"http://127.0.0.1:${liveServer.getAddress.getPort}"
+      def fetch(path: String) = client.send(
+        HttpRequest.newBuilder(URI.create(s"$liveBase$path")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(fetch("/health").statusCode() == 200)
 
-  test("TtlVerdict: a NEWER unhealthy observation beats an earlier-stored healthy verdict") {
-    // The review finding on the first r18 CAS form: a uniform CAS made
-    // the FIRST writer win, so a fast healthy probe storing before a
-    // slower probe observed the outage left the outage riding the TTL —
-    // the exact class the asymmetry exists to prevent, and a regression
-    // vs the old null-reset form in this interleaving. Unhealthy now
-    // stores UNCONDITIONALLY (it is never served, it only forces
-    // re-probes — recording it can only cost probes, never a wrong 200);
-    // only healthy stores race by CAS.
-    var probes = 0
-    var nowNs = 0L
-    val v = new HttpServe.TtlVerdict(100L, () => nowNs)
-    // B enters on the empty cache; while B's probe is in flight, A runs
-    // a COMPLETE healthy get (and stores "ok"); B then observes the
-    // outage LAST
-    assert(!v.get({
-      assert(v.get({ probes += 1; true })) // A: full cycle, stores healthy
-      probes += 1
-      false // B: the newer evidence — the outage
-    }))
-    nowNs = 1L * 1000000L
-    // inside A's would-be TTL window: B's store evicted the healthy
-    // verdict, so the next request RE-PROBES instead of serving 200
-    assert(!v.get({ probes += 1; false }))
-    assert(probes == 3)
-  }
-
-  test("AutoTtl re-derives k × p50 over served probes, on the cadence only") {
-    // r17 verdict #3: the startup-only derivation froze a long-lived
-    // server's staleness bound at startup probe cost. The evidence ring
-    // is the served traffic itself; the bound moves only at cadence
-    // ticks, in both directions.
-    var nowNs = 0L
-    val auto = new HttpServe.AutoTtl(4L, 1000L, 48L,
-      Seq(12.0, 12.0, 12.0), () => nowNs)
-    assert(auto.current == 48L)
-    // probe cost drifts up 10x — before the cadence the bound holds
-    (1 to 5).foreach(_ => auto.observe(120.0))
-    assert(auto.current == 48L)
-    // cadence reached: the next served probe re-derives over the ring
-    nowNs = 1000L * 1000000L
-    auto.observe(120.0)
-    assert(auto.current == 480L)
-    // the cadence re-arms — immediate further observations wait again
-    (1 to 4).foreach(_ => auto.observe(12.0))
-    assert(auto.current == 480L)
-    // second tick: cost came back down, so does the bound
-    nowNs = 2000L * 1000000L
-    auto.observe(12.0)
-    assert(auto.current == 48L)
-    // cadence 0 freezes the startup value forever (the r17 behavior,
-    // still selectable)
-    var t2 = 0L
-    val frozen = new HttpServe.AutoTtl(4L, 0L, 48L, Seq(12.0), () => t2)
-    (1 to 10).foreach { _ => t2 += 3600L * 1000000000L; frozen.observe(500.0) }
-    assert(frozen.current == 48L)
-    // self-healing start: a failed startup derivation begins at 0
-    // (default-off = probe every request) and derives a REAL bound from
-    // its first served probes at the first tick
-    var t3 = 0L
-    val heal = new HttpServe.AutoTtl(2L, 100L, 0L, Seq.empty, () => t3)
-    assert(heal.current == 0L)
-    (1 to 5).foreach(_ => heal.observe(10.0))
-    t3 = 100L * 1000000L
-    heal.observe(10.0)
-    assert(heal.current == 20L)
-  }
-
-  test("derived health TTL: k × measured probe p50, default-off on no evidence") {
-    // r16 verdict #5 ask: the production TTL comes from the probe's own
-    // measured cost. p50 = the median (lower middle at even n), so one
-    // GC-outlier probe cannot inflate the staleness bound.
-    assert(HttpServe.derivedTtlMs(Seq(12.0, 14.0, 13.0, 900.0, 12.5), 4) == 52)
-    assert(HttpServe.derivedTtlMs(Seq(10.0), 3) == 30)
-    // even n takes the lower middle; ceil keeps the bound conservative
-    assert(HttpServe.derivedTtlMs(Seq(10.2, 11.0), 2) == 21)
-    // no evidence or no k → 0, the default-off contract
-    assert(HttpServe.derivedTtlMs(Seq.empty, 4) == 0)
-    assert(HttpServe.derivedTtlMs(Seq(12.0), 0) == 0)
-    assert(HttpServe.derivedTtlMs(Seq(12.0), -1) == 0)
+      // a new entry lands; before any request resolves it, the gen dir it
+      // names for h1's bucket goes missing
+      ingest(liveEvent(1L, "h1"))
+      val genDir = java.nio.file.Paths.get(
+        s"$dir/state/bucket=${proj.store.bucketOf("h1")}/gen=${proj.store.currentMaxGen}")
+      val aside = java.nio.file.Paths.get(s"$dir/aside")
+      java.nio.file.Files.move(genDir, aside)
+      (1 to 3).foreach { i =>
+        val r = fetch("/health")
+        assert(r.statusCode() == 503, s"probe $i: ${r.body()}")
+        assert(r.body() == """{"status":"down"}""")
+      }
+      java.nio.file.Files.move(aside, genDir)
+      val repaired = fetch("/health")
+      assert(repaired.statusCode() == 200, repaired.body())
+      assert(fetch("/signals/h1").statusCode() == 200)
+    } finally liveServer.stop(0)
   }
 
   test("point-body LRU is single-flight: concurrent misses on one key share one compute") {

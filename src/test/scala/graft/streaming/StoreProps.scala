@@ -38,6 +38,25 @@ class StoreProps extends SparkSuite {
         .add("seq", "long").add("value", "string"))
   }
 
+  test("driver-side bucketOf(id) equals the bucketOf column the write path computes") {
+    import org.scalacheck.Arbitrary.arbitrary
+    import spark.implicits._
+    val genId = Gen.oneOf(arbitrary[String], Gen.alphaNumStr, Gen.uuid.map(_.toString))
+    for (numBuckets <- Seq(4, 8); seed <- 1L to 5L) {
+      val store = new BucketedStateStore(spark,
+        Files.createTempDirectory("graft-bucket-").toString, numBuckets)
+      val ids = Gen.listOfN(200, genId)(Gen.Parameters.default, Seed(seed)).get
+      val written = ids.toDF("id")
+        .select(org.apache.spark.sql.functions.col("id"),
+          store.bucketOf(org.apache.spark.sql.functions.col("id")))
+        .collect().map(_.getLong(1))
+      assert(written.length == ids.length)
+      ids.zip(written).foreach { case (id, b) =>
+        assert(store.bucketOf(id) == b, s"numBuckets=$numBuckets seed=$seed id=${id.map(_.toInt)}")
+      }
+    }
+  }
+
   test("arbitrary micro-batch cuts converge to the batch fold") {
     (1L to 5L).foreach { seed =>
       val log = genLog(Gen.Parameters.default, Seed(seed)).get
